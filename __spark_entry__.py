@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from unstructured_spark.operators import dedup, similarity, text_analysis
+from unstructured_spark.operators.skew import spread
 from unstructured_spark.operators.storage import zorder_key_sql
 from unstructured_spark.operators.text_analysis import (
     fxln_select_sql,
@@ -155,23 +156,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Scale-adaptive rebalance for a compute-heavy map stage above a
-    small-fixture scan: the bench parquet files are single-row-group
-    (one split), so scan-stage work — filters, projections, partial
-    aggregation, per-row expression trees — runs on ONE core while the
-    rest of local[32] idles. When the physical scan yields fewer splits
-    than the cluster's parallelism, round-robin repartition; at real
-    corpus scale the scan has >= cores splits and this is an identity
-    (no exchange enters the plan). Same discipline as
-    dedup.minhash_signatures / operators.main_content."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() >= sc.defaultParallelism:
-        return df
-    return df.repartition(sc.defaultParallelism)
 
 
 # ---------------------------------------------------------------------------
@@ -754,9 +738,10 @@ def q_partition_elements(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_chunk_by_title(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition then chunk with the by_title strategy — the reference's
-    one-call ``partition(file, chunking_strategy='by_title')`` flow,
-    fused: the chunk fold rides the parse UDF (one stage, no doc_id
-    re-exchange; tests/test_chunking.py pins fused == unfused)."""
+    one-call ``partition(file, chunking_strategy='by_title')`` flow:
+    the chunk fold rides the parse UDF (one stage, no doc_id
+    re-exchange; tests/test_chunking.py pins it to the explicit
+    partition_documents → chunk operator path)."""
     from unstructured_spark.operators.partition_auto import partition_and_chunk
 
     chunks = partition_and_chunk(
@@ -1266,7 +1251,7 @@ def q_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     window."""
     from unstructured_spark.operators.sampling import curriculum_order
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     banded = text_analysis.with_quality_q(docs).select(
         "doc_id",
         F.expr("quality_q div 1000000").cast("bigint").alias("band"),
@@ -3419,7 +3404,7 @@ def q_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction (ancestor hints / 100% link density), content blocks
     classify by integer lengths + the two smoothing window rules.
     Scale shape: synthesis, parse and per-doc rollup all happen in one
-    projection + one mapInPandas; the leading _spread is a
+    projection + one mapInPandas; the leading spread is a
     SMALL-FIXTURE rebalance only (the sf parquet is one input split,
     which serialized the whole Python classify stage onto one core —
     measured 2.5s -> 0.35s; a real corpus arrives in many splits, the
@@ -3428,7 +3413,7 @@ def q_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_main_content,
     )
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     return extract_main_content(_synth_crawl_pages(docs))
 
 
@@ -3540,14 +3525,14 @@ def q_page_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     (parsers/page_meta.py via operators/main_content.py). The
     canonical URL is the key dedup_by_url collapses syndicated copies
     on; noindex is the C4/RefinedWeb drop flag. Map-only after a
-    scale-adaptive small-fixture rebalance (_spread: an identity at
+    scale-adaptive small-fixture rebalance (spread: an identity at
     real corpus scan widths); head-only parse bounds per-row cost by
     head size. Oracle replays the synthesis field-for-field."""
     from unstructured_spark.operators.main_content import (
         extract_page_metadata,
     )
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     pages = docs.select(
         "doc_id",
         F.filter(

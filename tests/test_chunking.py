@@ -5,13 +5,13 @@ import pandas as pd
 import pytest
 
 from unstructured_spark.operators.chunking import (
-    _OUT_COLUMNS,
     ChunkingOptions,
     _make_batched_fold,
     _split_oversized,
     chunk_by_title,
     chunk_elements,
 )
+from unstructured_spark.schema import ELEMENT_COLUMNS
 
 
 def _elements(*rows):
@@ -39,7 +39,7 @@ def _run_fold(rows, by_title=False, **kwargs):
     frames = list(fold(iter([pd.DataFrame(rows)])))
     if not frames:
         return []
-    return pd.concat(frames)[_OUT_COLUMNS].to_dict("records")
+    return pd.concat(frames)[ELEMENT_COLUMNS].to_dict("records")
 
 
 class TestSplitOversized:
@@ -204,7 +204,11 @@ class TestSparkChunking:
     def test_fused_partition_and_chunk_matches_operator_path(self, spark):
         # the fused one-call flow (chunk fold inside the parse UDF) must
         # be row-identical to partition → exchange → chunk_by_title
-        from unstructured_spark.operators.partition_auto import partition_and_chunk
+        from unstructured_spark.operators.chunking import chunk
+        from unstructured_spark.operators.partition_auto import (
+            partition_and_chunk,
+            partition_documents,
+        )
 
         docs = spark.createDataFrame(
             [
@@ -219,8 +223,8 @@ class TestSparkChunking:
         fused = partition_and_chunk(
             docs, chunking_strategy="by_title", chunk_kwargs=kw
         ).select(*cols)
-        unfused = partition_and_chunk(
-            docs, chunking_strategy="by_title", chunk_kwargs=kw, fused=False
+        unfused = chunk(
+            partition_documents(docs), strategy="by_title", **kw
         ).select(*cols)
         assert sorted(map(tuple, fused.collect())) == sorted(
             map(tuple, unfused.collect())
@@ -230,7 +234,11 @@ class TestSparkChunking:
         # on_error='capture' synthesizes type='Error' rows; both paths
         # must pass them through VERBATIM (the unfused fold used to eat
         # them into CompositeElements — round-9 advisory fix)
-        from unstructured_spark.operators.partition_auto import partition_and_chunk
+        from unstructured_spark.operators.chunking import chunk
+        from unstructured_spark.operators.partition_auto import (
+            partition_and_chunk,
+            partition_documents,
+        )
 
         docs = spark.createDataFrame(
             [
@@ -243,8 +251,8 @@ class TestSparkChunking:
         fused = partition_and_chunk(
             docs, chunking_strategy="by_title", on_error="capture"
         ).select(*cols)
-        unfused = partition_and_chunk(
-            docs, chunking_strategy="by_title", on_error="capture", fused=False
+        unfused = chunk(
+            partition_documents(docs, on_error="capture"), strategy="by_title"
         ).select(*cols)
         frows = sorted(map(tuple, fused.collect()))
         urows = sorted(map(tuple, unfused.collect()))

@@ -21,12 +21,12 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from unstructured_spark.operators.chunking import (
-    _OUT_COLUMNS,
     ChunkingOptions,
     _make_batched_fold,
     _split_oversized,
 )
 from unstructured_spark.operators.metadata import py_finalize_doc
+from unstructured_spark.schema import ELEMENT_COLUMNS
 import pytest
 
 # long-running suite: deselected from the default fast tier (pytest.ini);
@@ -68,7 +68,7 @@ def _run(rows, **kw):
     frames = list(fold(iter([pd.DataFrame(rows)])))
     if not frames:
         return []
-    return pd.concat(frames)[_OUT_COLUMNS].to_dict("records")
+    return pd.concat(frames)[ELEMENT_COLUMNS].to_dict("records")
 
 
 def _tokens(s: str) -> list[str]:

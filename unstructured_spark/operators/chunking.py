@@ -40,7 +40,11 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from unstructured_spark.schema import CONSOLIDATION, ELEMENT_SCHEMA
+from unstructured_spark.schema import (
+    CONSOLIDATION,
+    ELEMENT_COLUMNS,
+    ELEMENT_SCHEMA,
+)
 
 
 # deterministic BPE-ish token: word runs or single punctuation marks
@@ -536,7 +540,7 @@ def _form_chunks(
         else [text]
     )
     for i, frag in enumerate(fragments):
-        chunk = {k: None for k in _OUT_COLUMNS}
+        chunk = {k: None for k in ELEMENT_COLUMNS}
         chunk.update(meta)
         chunk.update(
             type="CompositeElement",
@@ -554,9 +558,6 @@ def _form_chunks(
             return " ".join(text.split()[-opts.overlap :])
         return text[-opts.overlap :].strip()
     return ""
-
-
-_OUT_COLUMNS = [f.name for f in ELEMENT_SCHEMA.fields]
 
 
 def _pre_chunk_fold(
@@ -652,7 +653,7 @@ def _chunk_doc(rows: list[dict], opts: ChunkingOptions, by_title: bool) -> list[
     # synthesized type='Error' rows (on_error='capture' diagnostics)
     # pass through VERBATIM: folding a parse-failure marker into a
     # CompositeElement would erase the one signal it exists to carry.
-    # This also keeps the fused parse+chunk path (which never routes
+    # This also keeps the in-UDF parse+chunk path (which never routes
     # capture rows through the fold) bit-identical to this operator
     # path under capture mode.
     errors = [r for r in rows if r.get("type") == "Error"]
@@ -695,10 +696,10 @@ def _make_batched_fold(opts: ChunkingOptions, by_title: bool):
 
         def to_frame(out: list[dict]) -> "_pd.DataFrame":
             res = _pd.DataFrame(out)
-            for c in _OUT_COLUMNS:
+            for c in ELEMENT_COLUMNS:
                 if c not in res.columns:
                     res[c] = None
-            return res[_OUT_COLUMNS]
+            return res[ELEMENT_COLUMNS]
 
         carry: list[dict] = []
         for pdf in batches:

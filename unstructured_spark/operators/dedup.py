@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from unstructured_spark.operators.skew import spread
+
 # 60-bit token hash from md5 — portable: Spark `conv(substr(md5(t),1,15),16,10)`
 # equals DuckDB `cast('0x'||substr(md5(t),1,15) as bigint)`.
 MERSENNE31 = 2147483647  # 2^31 - 1
@@ -108,31 +110,11 @@ def minhash_signatures(
     (min over the shingle multiset == min over the set, so no distinct
     is needed.)
     """
-    spark_parallelism = df.sparkSession.sparkContext.defaultParallelism
-    # small-file inputs arrive as 1 split; spread the hash fan-out
-    base = df.repartition(spark_parallelism) if df.rdd.getNumPartitions() < spark_parallelism else df
-    ex = base.select(
-        F.col(doc_id),
-        F.explode(shingles(F.col(text), shingle_size)).alias("_s"),
-    ).select(F.col(doc_id), (token_hash(F.col("_s")) % F.lit(MERSENNE31)).alias("_h"))
-    # per-function MULTIPLIER, not just offset: with a shared multiplier
-    # the permutation is monotone in _h, every component picks the same
-    # argmin shingle, and the signature degenerates to one minhash
-    # repeated k times (est_jaccard collapses to 0/1)
-    aggs = [
-        F.min(
-            (
-                F.lit(HASH_A + 2 * h) * F.col("_h")
-                + F.lit(HASH_B + HASH_STEP * h)
-            )
-            % F.lit(MERSENNE31)
-        ).alias(f"_mh{h}")
-        for h in range(num_hashes)
-    ]
-    return (
-        ex.groupBy(doc_id)
-        .agg(*aggs)
-        .select(F.col(doc_id), F.array(*[f"_mh{h}" for h in range(num_hashes)]).alias("sig"))
+    sh = spread(df).select(
+        F.col(doc_id).alias("doc"), shingles(F.col(text), shingle_size).alias("sh")
+    )
+    return _minhash_sigs_from_shingles(sh, num_hashes).withColumnRenamed(
+        "doc", doc_id
     )
 
 
@@ -164,12 +146,10 @@ def lsh_candidate_pairs(
 
 
 def _minhash_sigs_from_shingles(sh_df: DataFrame, num_hashes: int) -> DataFrame:
-    """Signatures from a pre-staged ``(doc, sh)`` shingle-array frame —
-    the same explode → hash-once → k ``min`` aggregates as
-    :func:`minhash_signatures` (bit-identical components: the staged
-    array IS the distinct shingle set that function explodes), for
-    callers that also need the arrays themselves and must not pay a
-    second tokenize pass. Returns (doc, sig)."""
+    """Signatures from a pre-staged ``(doc, sh)`` shingle-array frame
+    (the body of :func:`minhash_signatures`, for callers that also need
+    the arrays themselves and must not pay a second tokenize pass).
+    Returns (doc, sig)."""
     # explode_OUTER + explicit null filter, NOT a plain explode: for a
     # plain explode over a staged array COLUMN, InferFiltersFromGenerate
     # adds `size(sh) > 0 AND isnotnull(sh)` and predicate pushdown
@@ -188,6 +168,10 @@ def _minhash_sigs_from_shingles(sh_df: DataFrame, num_hashes: int) -> DataFrame:
         .filter(F.col("_s").isNotNull())
         .select(F.col("doc"), (token_hash(F.col("_s")) % F.lit(MERSENNE31)).alias("_h"))
     )
+    # per-function MULTIPLIER, not just offset: with a shared multiplier
+    # the permutation is monotone in _h, every component picks the same
+    # argmin shingle, and the signature degenerates to one minhash
+    # repeated k times (est_jaccard collapses to 0/1)
     aggs = [
         F.min(
             (
@@ -494,19 +478,9 @@ def simhash_pairs(
       candidate stream would dwarf the banded join itself.
     """
     toks = F.array_distinct(F.split(F.trim(F.col(text)), "\\s+"))
-    # small-file inputs arrive as 1 split (single-row-group parquet):
     # the per-token fold below (49-counter accumulator per token) is the
-    # dominant cost and would run on ONE core while the cluster idles.
-    # Same scale-adaptive rebalance as minhash_signatures: identity (no
-    # exchange) whenever the scan already parallelizes — at corpus
-    # scale the condition is false and the plan is unchanged.
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    base_df = (
-        df.repartition(parallelism)
-        if df.rdd.getNumPartitions() < parallelism
-        else df
-    )
-    staged = base_df.select(
+    # dominant cost, so spread a single-split scan first
+    staged = spread(df).select(
         F.col(doc_id).alias("doc"), F.transform(toks, token_hash).alias("_h")
     )
     base = staged.select(
@@ -625,14 +599,12 @@ def ngram_jaccard_pairs(
     # times. Checkpoint-free: everything stays in one AQE-planned
     # query (an r9 experiment that cut lineage with a checkpoint
     # REGRESSED — the cut opts the LSH DAG out of AQE and serializes
-    # an extra job). The round-robin spread first keeps the shingle
-    # build parallel on small single-split inputs (identity at corpus
-    # scan widths); the by-doc hash exchange it feeds is work the
-    # signature aggregation needed anyway, so at scale this adds no
-    # shuffle that wasn't already fundamental.
+    # an extra job). ``spread`` first keeps the shingle build parallel
+    # on small single-split inputs; the by-doc hash exchange it feeds is
+    # work the signature aggregation needed anyway, so at scale this
+    # adds no shuffle that wasn't already fundamental.
     par = df.sparkSession.sparkContext.defaultParallelism
-    base = df.repartition(par) if df.rdd.getNumPartitions() < par else df
-    sh = base.select(
+    sh = spread(df, par).select(
         F.col(doc_id).alias("doc"), shingles(F.col(text), n).alias("sh")
     ).repartition(par, "doc")
     sigs = _minhash_sigs_from_shingles(sh, num_hashes)
@@ -986,16 +958,10 @@ def shared_ngram_spans(
     # O(tokens). The md5 gram hashing re-runs per side — map-only CPU,
     # the right trade at 100 TB where a token-sized localCheckpoint is
     # a non-replicated single-point-of-failure materialization.
-    # small-file inputs arrive as 1 split, and the checkpoint blocks
-    # inherit that partitioning — the md5 gram hashing (k-token concat
-    # + hash per token position, re-run per self-join side) would run
-    # on ONE core. Scale-adaptive rebalance before the checkpoint:
-    # identity (no exchange) when the scan already parallelizes.
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < parallelism:
-        df = df.repartition(parallelism)
+    # The checkpoint blocks inherit the scan's partitioning, so spread
+    # first.
     base = (
-        df.select(F.col(doc_id).alias("doc"), toks.alias("_t"))
+        spread(df).select(F.col(doc_id).alias("doc"), toks.alias("_t"))
         .filter(F.size("_t") >= k)
         .localCheckpoint(eager=False)
     )

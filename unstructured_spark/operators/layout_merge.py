@@ -19,10 +19,12 @@ native per-page equi-join — ``(doc_id, page_number)`` is the join key,
 the geometric predicate rides along — so Catalyst shuffles once on the
 page key and the quadratic term is bounded by boxes-per-page, never
 corpus size.  Only the 5-rule merge (``merge_inferred_with_extracted``)
-uses a cogrouped ``applyInPandas``: it iterates to a fixpoint with
-in-place box expansion (reference ``:340-375``), which is inherently
-sequential *within* a page; the parallel unit stays the page, matching
-the reference's own per-page loop.
+runs in Python (``mapInPandas`` over page-sorted partitions): it
+iterates to a fixpoint with in-place box expansion (reference
+``:340-375``), which is inherently sequential *within* a page; the
+parallel unit stays the page, matching the reference's own per-page
+loop. ``parsers.pdf_raster`` runs the same per-page rules
+(:func:`_merge_page_cols`) on one page of a hi_res PDF.
 
 Numeric conventions follow the reference exactly: +1 pixel-inclusive
 intersection/area math with EPSILON_AREA=0.01 for the pairwise masks
@@ -291,7 +293,7 @@ def merge_layout_with_ocr_text(
 
 
 # ---------------------------------------------------------------------------
-# The 5-rule inferred/extracted page merge (cogrouped pandas; numpy port)
+# The 5-rule inferred/extracted page merge (numpy port)
 # ---------------------------------------------------------------------------
 
 
@@ -326,116 +328,6 @@ def _expand(coords: np.ndarray, others: np.ndarray) -> np.ndarray:
     )
 
 
-def _merge_page_arrays(
-    inf: pd.DataFrame,
-    ext: pd.DataFrame,
-    page_width: float,
-    page_height: float,
-    same_t: float,
-    sub_t: float,
-    max_rounds: int = 5,
-) -> pd.DataFrame:
-    """Port of array_merge_inferred_layout_with_extracted_layout
-    (pdfminer_processing.py:250-410): rules 0-5 over one page."""
-    if len(ext) == 0:
-        return inf
-    if len(inf) == 0:
-        return ext
-    icoords = inf[["x1", "y1", "x2", "y2"]].to_numpy(dtype=float)
-    ecoords = ext[["x1", "y1", "x2", "y2"]].to_numpy(dtype=float)
-    ekinds = ext["kind"].to_numpy()
-    e_is_img = np.isin(ekinds, IMAGE_KINDS)
-
-    # RULE 0: drop full-page extracted images
-    img_keep = np.where(e_is_img)[0]
-    if len(img_keep):
-        full_page = np.array([[0.0, 0.0, float(page_width), float(page_height)]])
-        is_full = _np_iou_gt(
-            ecoords[img_keep], full_page, FULL_PAGE_REGION_THRESHOLD
-        ).sum(axis=1).astype(bool)
-        img_keep = img_keep[~is_full]
-
-    # RULE 1: inferred ≈ extracted image → drop inferred
-    inf_same_as_img = (
-        _np_iou_gt(icoords, ecoords[img_keep], same_t).sum(axis=1).astype(bool)
-        if len(img_keep)
-        else np.zeros(len(inf), dtype=bool)
-    )
-    inf_proc_df = inf[~inf_same_as_img].reset_index(drop=True)
-    icoords = icoords[~inf_same_as_img]
-    inf_keep = np.ones(len(inf_proc_df), dtype=bool)
-
-    text_idx = np.where(~e_is_img)[0]
-    if len(text_idx) == 0:
-        return pd.concat([inf_proc_df, ext.iloc[img_keep]], ignore_index=True)
-    if len(inf_proc_df) == 0:
-        return ext.iloc[np.concatenate([img_keep, text_idx])].reset_index(drop=True)
-
-    etext_df = ext.iloc[text_idx].reset_index(drop=True)
-    etext_coords = ecoords[text_idx]
-
-    # RULE 2: extracted text ≈ inferred → keep inferred box (expanded),
-    # take extracted text/is_extracted, drop extracted
-    same = _np_iou_gt(etext_coords, icoords, same_t)
-    e_same = same.any(axis=1)
-    first_match = same.argmax(axis=1)
-    inf_texts = inf_proc_df["text"].to_numpy(dtype=object)
-    inf_isext = inf_proc_df["is_extracted"].to_numpy(dtype=object)
-    for e_i in np.where(e_same)[0]:
-        i_i = first_match[e_i]
-        inf_texts[i_i] = etext_df["text"].iloc[e_i]
-        inf_isext[i_i] = etext_df["is_extracted"].iloc[e_i]
-        icoords[i_i : i_i + 1] = _expand(
-            icoords[i_i : i_i + 1], etext_coords[e_i : e_i + 1]
-        )
-
-    # RULE 3: extracted subregion of inferred TEXT region → merge into
-    # inferred (expand box), iterate to fixpoint (expansion can create
-    # new containments); max_rounds bounds the loop
-    inf_is_text = ~np.isin(inf_proc_df["kind"].to_numpy(), NON_TEXT_INFERRED_KINDS)
-    inf_proc = inf_is_text.copy()
-    ext_proc = ~e_same
-    rounds = 0
-    while rounds < max_rounds and inf_proc.any() and ext_proc.any():
-        rounds += 1
-        inf_proc_start, ext_proc_start = inf_proc.copy(), ext_proc.copy()
-        sub = _np_subregion(etext_coords, icoords, sub_t)
-        for i_i in np.where(inf_proc_start)[0]:
-            matches = np.where(sub[:, i_i] & ext_proc)[0]
-            if not matches.size:
-                continue
-            ext_proc[matches] = False
-            inf_proc[i_i] = False
-            icoords[i_i : i_i + 1] = _expand(icoords[i_i : i_i + 1], etext_coords[matches])
-        if np.array_equal(inf_proc_start, inf_proc) and np.array_equal(
-            ext_proc_start, ext_proc
-        ):
-            break
-
-    # RULE 4: subregion relationship in either direction between kept
-    # extracted and still-unmatched (or image-like) inferred → drop
-    # inferred, trust extracted; inferred Tables are exempt
-    kept_ext_idx = np.concatenate([img_keep, text_idx[ext_proc]])
-    if kept_ext_idx.size:
-        inf_imglike = np.isin(inf_proc_df["kind"].to_numpy(), ("Figure", "Image", "Picture"))
-        inf_proc = np.logical_or(inf_proc, inf_imglike)
-        cand = np.where(inf_proc)[0]
-        if cand.size:
-            kept_ecoords = ecoords[np.sort(kept_ext_idx)]
-            i_sub_e = _np_subregion(icoords[cand], kept_ecoords, sub_t)
-            e_sub_i = _np_subregion(kept_ecoords, icoords[cand], sub_t)
-            remove = (i_sub_e | e_sub_i.T).sum(axis=1).astype(bool)
-            inf_keep[cand[remove]] = False
-
-    # RULE 5: final = kept extracted (page order) + kept inferred
-    out_inf = inf_proc_df[inf_keep].copy()
-    out_inf[["x1", "y1", "x2", "y2"]] = icoords[inf_keep]
-    out_inf["text"] = inf_texts[inf_keep]
-    out_inf["is_extracted"] = inf_isext[inf_keep]
-    out_ext = ext.iloc[np.sort(kept_ext_idx)] if kept_ext_idx.size else ext.iloc[[]]
-    return pd.concat([out_ext, out_inf], ignore_index=True)
-
-
 def _merge_page_cols(
     kind: np.ndarray,
     text: np.ndarray,
@@ -450,24 +342,17 @@ def _merge_page_cols(
     sub_t: float,
     max_rounds: int = 5,
 ):
-    """Columnar twin of :func:`_merge_page_arrays` (r13): identical
-    rules 0-5 over batch-level numpy column arrays — rows [s, m) are
-    the page's inferred side, [m, e) the extracted side. Returns
+    """Port of array_merge_inferred_layout_with_extracted_layout
+    (pdfminer_processing.py:250-410): rules 0-5 over one page held in
+    batch-level numpy column arrays — rows [s, m) are the page's
+    inferred side, [m, e) the extracted side. Returns
     (ext_keep_abs, inf_keep_abs, inf_coords, inf_text, inf_isext):
     ABSOLUTE batch indices of surviving extracted rows (page order)
     and surviving inferred rows, plus the inferred side's (possibly
-    rule-2/3 mutated) coords/text/is_extracted. The pandas version
-    spent ~80% of its 5ms/page in DataFrame take/getitem/concat
-    (profiled r13); this form does the same arithmetic on slices."""
-    ni, ne = m - s, e - m
-    if ne == 0:
-        return (
-            np.empty(0, dtype=np.int64),
-            np.arange(s, m),
-            coords[s:m],
-            text[s:m],
-            isext[s:m],
-        )
+    rule-2/3 mutated) coords/text/is_extracted. Working on index
+    ranges of whole-batch columns keeps per-page cost to the numpy
+    geometry, with no per-page DataFrame take/concat."""
+    ni = m - s
     if ni == 0:
         return (
             np.arange(m, e),
@@ -604,7 +489,16 @@ def merge_inferred_with_extracted(
 
     Output boxes are re-ordered top-left (basic reading sort, reference
     merge_inferred_with_extracted_layout → sort_text_regions
-    pdfminer_processing.py:807-813) and re-numbered 0..n-1 per page."""
+    pdfminer_processing.py:807-813) and re-numbered 0..n-1 per page.
+
+    ``same_region_threshold`` must lie strictly between 0 and 1: the
+    output-order invariant below relies on an IoU of 1.0 exceeding it.
+    """
+    if not 0.0 < float(same_region_threshold) < 1.0:
+        raise ValueError(
+            "same_region_threshold must satisfy 0 < t < 1, got "
+            f"{same_region_threshold!r}"
+        )
     s_t, sub_t = float(same_region_threshold), float(subregion_threshold)
     p_w, p_h = float(page_width), float(page_height)
     keys = ["doc_id", "page_number"]
@@ -618,20 +512,17 @@ def merge_inferred_with_extracted(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # COLUMNAR page walk (r13): the former per-page pandas path
-        # (iloc slice → _merge_page_arrays → take → column assigns →
-        # per-page DataFrame, pd.concat at flush) spent ~80% of its
-        # ~5ms/page inside DataFrame take/getitem/setitem/concat
-        # (profiled; the numpy geometry itself was ~0.4ms). Here every
-        # Arrow batch is decomposed ONCE into numpy column arrays, each
-        # page is merged by _merge_page_cols on index ranges, survivors
-        # are gathered per column, and exactly ONE DataFrame is built
-        # per output flush.
+        # Columnar page walk: every Arrow batch is decomposed ONCE into
+        # numpy column arrays, each page is merged by _merge_page_cols
+        # on index ranges, survivors are gathered per column, and
+        # exactly ONE DataFrame is built per output flush (per-page
+        # DataFrame take/concat would dominate the numpy geometry).
         pending: pd.DataFrame | None = None  # rows of the unfinished tail key
         acc: dict[str, list[np.ndarray]] = {c: [] for c in BOX_COLS}
         acc_rows = 0
 
-        def merge_batch(pdf: pd.DataFrame) -> None:
+        def merge_batch(pdf: pd.DataFrame, starts: np.ndarray) -> None:
+            # ``starts``: first row of each page group in ``pdf``
             nonlocal acc_rows
             doc_a = pdf["doc_id"].to_numpy()
             page_a = pdf["page_number"].to_numpy()
@@ -643,12 +534,7 @@ def merge_inferred_with_extracted(
                 [pdf[c].to_numpy(dtype=float) for c in ("x1", "y1", "x2", "y2")]
             )
             side_a = pdf["_side"].to_numpy()
-            n = len(pdf)
-            change = np.empty(n, dtype=bool)
-            change[0] = True
-            change[1:] = (doc_a[1:] != doc_a[:-1]) | (page_a[1:] != page_a[:-1])
-            starts = np.flatnonzero(change)
-            bounds = np.append(starts, n)
+            bounds = np.append(starts, len(pdf))
             for gi in range(len(starts)):
                 s, e = int(bounds[gi]), int(bounds[gi + 1])
                 # rows within a key arrive sorted by (_side, box_id) —
@@ -658,17 +544,18 @@ def merge_inferred_with_extracted(
                 ext_i, inf_i, inf_c, inf_t, inf_x = _merge_page_cols(
                     kind_a, text_a, isx_a, coords, s, m, e, p_w, p_h, s_t, sub_t
                 )
-                n_ext, n_inf = len(ext_i), len(inf_i)
-                n_out = n_ext + n_inf
+                n_out = len(ext_i) + len(inf_i)
                 if n_out == 0:
                     continue
-                # extracted rows first, then inferred — the stable
-                # reading-order lexsort below matches the pandas path's
-                # concat order (full-coord ties across the two groups
-                # are impossible: rule 1 drops any inferred box whose
-                # IoU with a kept extracted image exceeds the
-                # threshold, and identical coords are IoU 1.0)
-                o_x = np.concatenate([coords[ext_i], inf_c]) if n_inf else coords[ext_i]
+                # kept extracted rows (page order) first, then kept
+                # inferred rows; the stable lexsort below keeps that
+                # order among full-coordinate ties. With no extracted
+                # text on the page the kept extracted rows are images,
+                # and rule 1 has dropped every inferred box whose IoU
+                # with one of them exceeds same_t — identical coords
+                # have IoU 1.0 > same_t (0 < same_t < 1 is checked on
+                # entry), so no inferred box ties a kept image there.
+                o_x = np.concatenate([coords[ext_i], inf_c])
                 o_text = np.concatenate([text_a[ext_i], inf_t])
                 o_isx = np.concatenate([isx_a[ext_i], inf_x])
                 all_i = np.concatenate([ext_i, inf_i])
@@ -712,10 +599,10 @@ def merge_inferred_with_extracted(
             starts = np.flatnonzero(np.concatenate([[True], change]))
             pending = pdf.iloc[starts[-1]:]
             if starts[-1] > 0:
-                merge_batch(pdf.iloc[: starts[-1]])
+                merge_batch(pdf.iloc[: starts[-1]], starts[:-1])
             yield from flush()
         if pending is not None and len(pending):
-            merge_batch(pending)
+            merge_batch(pending, np.zeros(1, dtype=np.int64))
         yield from flush(force=True)
 
     return pre.mapInPandas(run, BOX_SCHEMA)

@@ -7,9 +7,9 @@ rows] → metadata finalization (hash ids, languages, hierarchy).
 
 Scale design (SURVEY §4):
 - one input row → N output rows entirely executor-side; no shuffle in
-  the parse stage. Parallelism = input splits; for few-large-docs skew,
-  ``repartition(n)`` the documents DF first (cheap: rows are (path,
-  bytes)).
+  the parse stage. Parallelism = input splits, so a batch input with
+  fewer splits than ``num_partitions`` (default: the cluster's cores)
+  is rebalanced first (``skew.spread``; cheap: rows are (path, bytes)).
 - detection reads only the head bytes; parsers are lazily imported per
   executor process (the reference's partitioner cache trick).
 - at 100 TB, content should be paths into object storage with
@@ -19,14 +19,18 @@ Scale design (SURVEY §4):
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from unstructured_spark.schema import ELEMENT_SCHEMA
-
-_OUT_COLUMNS = [f.name for f in ELEMENT_SCHEMA.fields]
+from unstructured_spark.operators.skew import spread
+from unstructured_spark.schema import (
+    ELEMENT_COLUMNS,
+    ELEMENT_SCHEMA,
+    empty_element_row,
+)
 
 
 def partition_documents(
@@ -57,24 +61,18 @@ def partition_documents(
 
     ``per_doc_transform`` (rows → rows over the finalized element dicts
     of ONE document, schema-preserving) runs inside the same UDF pass —
-    the fusion hook ``partition_and_chunk`` uses to run the chunk fold
-    without a second exchange + Arrow round-trip (a document is fully
-    contained in one input row, so any per-doc fold is a free rider on
-    the parse stage).
+    the hook ``partition_and_chunk`` and ``partition_and_chunk_stream``
+    use to run the chunk fold without a second exchange + Arrow
+    round-trip (a document is fully contained in one input row, so any
+    per-doc fold is a free rider on the parse stage). Capture-mode
+    Error rows never pass through it.
     """
     cols = [doc_id, content]
     if path and path in df.columns:
         cols.append(path)
     if content_type and content_type in df.columns:
         cols.append(content_type)
-    narrowed = df.select(*cols)
-    # spread few-large-files inputs across the cluster: parse parallelism
-    # equals input partitions, and a single parquet file is one split.
-    # (streaming microbatches manage their own partitioning — no .rdd)
-    if not df.isStreaming:
-        target = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-        if narrowed.rdd.getNumPartitions() < target:
-            narrowed = narrowed.repartition(target)
+    narrowed = spread(df.select(*cols), num_partitions)
     path_col = path if path in narrowed.columns else None
     ct_col = content_type if content_type in narrowed.columns else None
 
@@ -91,7 +89,7 @@ def partition_documents(
             rows: list[dict] = []
             # freeze UNSTRUCTURED_* env overrides once per Arrow batch:
             # the classifier predicates otherwise re-read + re-parse env
-            # per ELEMENT inside the parsers (r7 spine regression)
+            # per ELEMENT inside the parsers
             with classify.env_snapshot():
                 for rec in pdf.itertuples(index=False):
                     rec_d = rec._asdict()
@@ -119,20 +117,19 @@ def partition_documents(
                             # auditable failure row: at corpus scale the
                             # drop rate and its causes must be queryable,
                             # not silently vanished
-                            row = {c: None for c in _OUT_COLUMNS}
-                            row.update(
-                                doc_id=str(rec_d[doc_id]),
-                                element_index=0,
-                                type="Error",
-                                text=f"{type(e).__name__}: {e}",
-                                filename=(fname or "").rsplit("/", 1)[-1] or None,
+                            row = empty_element_row(
+                                str(rec_d[doc_id]), 0, "Error",
+                                f"{type(e).__name__}: {e}",
+                            )
+                            row["filename"] = (
+                                (fname or "").rsplit("/", 1)[-1] or None
                             )
                             rows.append(row)
                         continue
                     did = str(rec_d[doc_id])
                     doc_rows: list[dict] = []
                     for idx, el in enumerate(els):
-                        row = {c: None for c in _OUT_COLUMNS}
+                        row = {c: None for c in ELEMENT_COLUMNS}
                         row.update(
                             {k: v for k, v in el.items() if k in row}
                         )
@@ -147,13 +144,21 @@ def partition_documents(
                     if per_doc_transform is not None and doc_rows:
                         doc_rows = per_doc_transform(doc_rows)
                     rows.extend(doc_rows)
-            yield (
-                pd.DataFrame(rows, columns=_OUT_COLUMNS)
-                if rows
-                else pd.DataFrame(columns=_OUT_COLUMNS)
-            )
+            yield pd.DataFrame(rows, columns=ELEMENT_COLUMNS)
 
     return narrowed.mapInPandas(parse_batches, schema=ELEMENT_SCHEMA)
+
+
+def _chunk_fold(by_title: bool, chunk_kwargs: dict | None = None):
+    """The built-in per-document chunk fold as a ``per_doc_transform``:
+    the same ``_chunk_doc`` the ``chunk`` operator runs over each
+    document's ordered rows, so folding inside the parse UDF gives the
+    operator path's rows without its doc_id exchange and sort."""
+    from unstructured_spark.operators.chunking import ChunkingOptions, _chunk_doc
+
+    return partial(
+        _chunk_doc, opts=ChunkingOptions(**(chunk_kwargs or {})), by_title=by_title
+    )
 
 
 def partition_and_chunk(
@@ -161,27 +166,21 @@ def partition_and_chunk(
     *,
     chunking_strategy: str | None = None,
     chunk_kwargs: dict | None = None,
-    fused: bool = True,
     **partition_kwargs,
 ):
     """The reference's one-call flow ``partition(file,
     chunking_strategy=...)`` (auto.py:30-300): partition to elements,
     then dispatch to a chunking strategy.
 
-    ``fused=True`` (default) runs the built-in chunk folds INSIDE the
-    parse UDF via ``per_doc_transform``: a document's elements never
-    leave the worker between partition and chunk, so the pipeline is a
-    single shuffle-free stage with one Arrow round-trip (vs. parse →
-    exchange on doc_id → sort → second Python pass). Identical output
-    by construction — the fold is the same ``_chunk_doc`` the operator
-    path runs, and it only ever needs one document's rows. Plug-in
-    strategies (registered via ``register_chunking_strategy``) operate
-    on DataFrames and always take the unfused path.
+    The built-in strategies run their chunk fold INSIDE the parse UDF
+    (:func:`_chunk_fold`): a document's elements never leave the worker
+    between partition and chunk, so the pipeline is a single
+    shuffle-free stage with one Arrow round-trip. Plug-in strategies
+    (registered via ``register_chunking_strategy``) operate on
+    DataFrames and take the ``partition_documents`` → ``chunk`` chain.
     """
     from unstructured_spark.operators.chunking import (
         _STRATEGIES,
-        ChunkingOptions,
-        _chunk_doc,
         chunk,
         chunk_by_title,
         chunk_elements,
@@ -189,22 +188,16 @@ def partition_and_chunk(
 
     if chunking_strategy is None:
         return partition_documents(df, **partition_kwargs)
-    # fuse ONLY while the registered strategy is still the built-in
-    # function: a caller who re-registers 'basic'/'by_title' via
-    # register_chunking_strategy must get their plug-in, not a silent
-    # built-in fold
+    # fold in the UDF ONLY while the registered strategy is still the
+    # built-in function: a caller who re-registers 'basic'/'by_title'
+    # via register_chunking_strategy must get their plug-in, not a
+    # silent built-in fold
     builtin = {"basic": chunk_elements, "by_title": chunk_by_title}
     if (
-        fused
-        and chunking_strategy in builtin
+        chunking_strategy in builtin
         and _STRATEGIES.get(chunking_strategy) is builtin[chunking_strategy]
     ):
-        opts = ChunkingOptions(**(chunk_kwargs or {}))
-        by_title = chunking_strategy == "by_title"
-
-        def fold(doc_rows: list[dict]) -> list[dict]:
-            return _chunk_doc(doc_rows, opts, by_title)
-
+        fold = _chunk_fold(chunking_strategy == "by_title", chunk_kwargs)
         return partition_documents(df, per_doc_transform=fold, **partition_kwargs)
     els = partition_documents(df, **partition_kwargs)
     return chunk(els, strategy=chunking_strategy, **(chunk_kwargs or {}))

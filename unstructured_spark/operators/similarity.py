@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from unstructured_spark.operators.skew import spread
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -63,14 +65,13 @@ def cosine_topk(
         F.col(qvec).alias("_qvec"),
         l2_norm(F.col(qvec)).alias("_qn"),
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cvec"),
-        l2_norm(F.col(vec_col)).alias("_cn"),
+    c = spread(
+        corpus.select(
+            F.col(id_col).alias("neighbor_id"),
+            F.col(vec_col).alias("_cvec"),
+            l2_norm(F.col(vec_col)).alias("_cn"),
+        )
     )
-    spark_parallelism = corpus.sparkSession.sparkContext.defaultParallelism
-    if c.rdd.getNumPartitions() < spark_parallelism:
-        c = c.repartition(spark_parallelism)
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))

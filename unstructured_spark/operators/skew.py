@@ -12,6 +12,8 @@ funnel one key's rows through one task — these helpers split them:
   compositions like avg = sum/count).
 - :func:`diagnose_skew` — key-frequency profile to decide whether
   salting is worth the extra exchange.
+- :func:`spread` — round-robin rebalance of a scan that has fewer
+  splits than the cluster has cores.
 """
 
 from __future__ import annotations
@@ -94,3 +96,26 @@ def diagnose_skew(
         .orderBy(F.desc("count"))
         .limit(top)
     )
+
+
+def spread(df: DataFrame, target: int | None = None) -> DataFrame:
+    """Scale-adaptive rebalance before a compute-heavy map stage.
+
+    Small inputs often arrive as ONE split (a single-row-group parquet
+    file, a coalesced fixture, a single large document file), so the
+    scan stage's per-row work — tokenize, hash fan-out, shingling,
+    parsing — would run on one core while the rest of the cluster
+    idles. When the physical scan yields fewer than ``target`` splits
+    (default: ``defaultParallelism``), round-robin repartition to
+    ``target``. At corpus scale the scan already has at least that many
+    splits, so this is an identity and no exchange enters the plan.
+
+    Streaming micro-batches manage their own partitioning (and have no
+    ``.rdd``), so a streaming DataFrame is returned unchanged.
+    """
+    if df.isStreaming:
+        return df
+    target = target or df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df

@@ -13,6 +13,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from unstructured_spark.operators.skew import spread
+
 # Common English stopwords used for quality scoring.
 STOPWORDS = (
     "the a an and or of to in is are was were for with on at by from that "
@@ -141,14 +143,6 @@ def with_fxln(df: DataFrame, m: str, prefix: str) -> DataFrame:
     cols = [F.col(c) for c in df.columns]
     cols += [F.expr(expr).alias(name) for name, expr in fxln_steps(m, prefix, "div")]
     return df.select(*cols)
-
-
-def bpe_ish_tokens(col: Column) -> Column:
-    """A BPE-ish regex tokenization: word pieces, numbers, punctuation
-    runs (approximates GPT-2's pre-tokenizer split)."""
-    return F.regexp_extract_all(
-        col, F.lit(r"('s|'t|'re|'ve|'m|'ll|'d| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+)"), 1
-    )
 
 
 def token_count(col: Column) -> Column:
@@ -305,12 +299,7 @@ def winnow_fingerprints(
 
     Returns (doc_id, fp_hash) — one row per selected distinct hash.
     """
-    par = df.sparkSession.sparkContext.defaultParallelism
-    base = (
-        df.repartition(par)
-        if df.rdd.getNumPartitions() < par
-        else df
-    )
+    base = spread(df)
     toks = F.filter(
         F.split(
             F.lower(F.trim(F.regexp_replace(F.col(text), "\\s+", " "))), " "

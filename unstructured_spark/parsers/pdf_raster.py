@@ -21,7 +21,8 @@ TEXT comes from the content stream, not OCR. The full route is then:
 
     surrogate raster → layout model → scale boxes to PDF points →
     5-rule merge with extracted text blocks (layout_merge's
-    _merge_page_arrays, the reference's own rules) → typed elements
+    _merge_page_cols, the same per-page rules the Spark operator
+    merge_inferred_with_extracted runs) → typed elements
 
 making ``strategy='hi_res'`` run END-TO-END on born-digital PDFs with
 a registered layout model and zero new dependencies. With poppler-real
@@ -102,58 +103,55 @@ def merge_detections_with_blocks(
     reference's 5-rule merge against the extracted text blocks.
 
     ``blocks`` are ``_runs_to_blocks`` dicts (text + top-down x0, top,
-    x1, bot); output rows carry (kind, text, x1, y1, x2, y2,
-    is_extracted) in basic reading order.
+    x1, bot); output rows carry (kind, text, is_extracted, x1, y1, x2,
+    y2) in basic reading order.
     """
-    import pandas as pd
-
     from unstructured_spark.operators.layout_merge import (
         LAYOUT_SAME_REGION_THRESHOLD,
         LAYOUT_SUBREGION_THRESHOLD,
-        _merge_page_arrays,
+        _merge_page_cols,
     )
 
-    inf = pd.DataFrame(
-        [
-            {
-                "kind": d.get("type", "Text"),
-                "text": d.get("text"),
-                "is_extracted": "false",
-                "x1": float(d["x1"]) / scale,
-                "y1": float(d["y1"]) / scale,
-                "x2": float(d["x2"]) / scale,
-                "y2": float(d["y2"]) / scale,
-            }
-            for d in detections
-        ],
-        columns=["kind", "text", "is_extracted", "x1", "y1", "x2", "y2"],
+    # the page as columns: inferred rows [0, ni), extracted rows [ni, n);
+    # extracted blocks are always kind "Text" (never images)
+    ni, n = len(detections), len(detections) + len(blocks)
+    kind = np.array(
+        [d.get("type", "Text") for d in detections] + ["Text"] * len(blocks),
+        dtype=object,
     )
-    ext = pd.DataFrame(
-        [
-            {
-                "kind": "Text",
-                "text": b["text"],
-                "is_extracted": "true",
-                "x1": float(b["x0"]),
-                "y1": float(b["top"]),
-                "x2": float(b["x1"]),
-                "y2": float(b["bot"]),
-            }
-            for b in blocks
-        ],
-        columns=["kind", "text", "is_extracted", "x1", "y1", "x2", "y2"],
+    text = np.array(
+        [d.get("text") for d in detections] + [b["text"] for b in blocks],
+        dtype=object,
     )
-    merged = _merge_page_arrays(
-        inf,
-        ext,
-        page_w,
-        page_h,
-        LAYOUT_SAME_REGION_THRESHOLD,
-        LAYOUT_SUBREGION_THRESHOLD,
+    isext = np.array(["false"] * ni + ["true"] * len(blocks), dtype=object)
+    coords = np.array(
+        [[float(d[k]) / scale for k in ("x1", "y1", "x2", "y2")] for d in detections]
+        + [[float(b[k]) for k in ("x0", "top", "x1", "bot")] for b in blocks],
+        dtype=float,
+    ).reshape(n, 4)
+    ext_i, inf_i, inf_c, inf_t, inf_x = _merge_page_cols(
+        kind, text, isext, coords, 0, ni, n, page_w, page_h,
+        LAYOUT_SAME_REGION_THRESHOLD, LAYOUT_SUBREGION_THRESHOLD,
     )
-    # basic reading sort (top-left), the reference's sort_text_regions
-    merged = merged.sort_values(["y1", "x1"], kind="stable")
-    rows = merged.to_dict("records")
+    # kept extracted rows (page order), then kept inferred rows
+    o_kind = np.concatenate([kind[ext_i], kind[inf_i]])
+    o_text = np.concatenate([text[ext_i], inf_t])
+    o_isx = np.concatenate([isext[ext_i], inf_x])
+    o_xy = np.concatenate([coords[ext_i], inf_c])
+    # basic reading sort (top-left, stable), the reference's
+    # sort_text_regions
+    rows = [
+        {
+            "kind": o_kind[i],
+            "text": o_text[i],
+            "is_extracted": o_isx[i],
+            "x1": float(o_xy[i, 0]),
+            "y1": float(o_xy[i, 1]),
+            "x2": float(o_xy[i, 2]),
+            "y2": float(o_xy[i, 3]),
+        }
+        for i in np.lexsort((o_xy[:, 0], o_xy[:, 1]))
+    ]
     # rule 3 expands inferred boxes but (like the reference) drops the
     # absorbed extracted TEXT; the reference refills it with
     # aggregate_embedded_text_by_block — same here, scalar per page
@@ -193,7 +191,7 @@ def _aggregate_block_text(
 
 
 # ---------------------------------------------------------------------------
-# Real-rasterizer plug point (round 5): when a true PDF rasterizer is
+# Real-rasterizer plug point: when a true PDF rasterizer is
 # registered (e.g. model_adapters.PdfiumRasterizer — pypdfium2-gated),
 # the hi_res merge path runs on real glyph pixels instead of the
 # geometry surrogate, and born-digital ocr_only becomes possible (the

@@ -91,12 +91,6 @@ def _iter_gzip_members(data: bytes) -> Iterator[bytes]:
                 return  # truncated final member: kept what decoded
 
 
-def _gunzip_members(data: bytes) -> bytes:
-    """Whole-archive form of :func:`_iter_gzip_members` for the
-    in-memory record iterator."""
-    return b"".join(_iter_gzip_members(data))
-
-
 def _iter_gzip_members_stream(
     chunks: Iterator[bytes], *, step: int = 1 << 20
 ) -> Iterator[bytes]:

@@ -11,7 +11,8 @@ Chunking inside a stream: ``groupBy().applyInPandas`` /
 ``sortWithinPartitions`` are not available on unaggregated streams, but
 chunking is per-document and the parse UDF already holds the whole
 document — so the streaming pipeline runs the chunk fold *inside the
-same pass* (zero extra shuffle, stateless microbatches).
+same pass*, exactly as batch ``partition_and_chunk`` does: one Python
+map node per micro-batch, zero extra shuffle, stateless microbatches.
 """
 
 from __future__ import annotations
@@ -20,8 +21,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from unstructured_spark.operators.partition_auto import partition_documents
-from unstructured_spark.schema import ELEMENT_SCHEMA
+from unstructured_spark.operators.partition_auto import (
+    _chunk_fold,
+    partition_documents,
+)
 
 
 def read_document_stream(
@@ -64,24 +67,16 @@ def partition_and_chunk_stream(
     by_title: bool = True,
     **chunk_kwargs,
 ) -> DataFrame:
-    """Parse AND chunk each arriving document in one UDF pass.
-
-    The chunk fold needs the whole ordered document, which the parse
-    UDF already has per input row — fusing them avoids the shuffle that
-    batch chunking uses and sidesteps streaming's no-sort rule.
+    """Parse AND chunk each arriving document in one UDF pass — the
+    same per-document fold batch ``partition_and_chunk`` runs for the
+    built-in ``by_title`` / ``basic`` strategies, so a drained stream
+    yields the batch rows. The fold needs the whole ordered document,
+    which the parse UDF already has per input row; this sidesteps
+    streaming's no-sort rule. Plug-in strategies are not consulted:
+    their DataFrame chain sorts, which a stream cannot.
     """
-    from unstructured_spark.operators.chunking import (
-        ChunkingOptions,
-        _make_batched_fold,
-    )
-
-    opts = ChunkingOptions(**chunk_kwargs)
-    elements = partition_documents(docs)
-    # parse output is doc-contiguous and ordered within each partition,
-    # which is all the batched fold needs; its carry-buffer handles docs
-    # that straddle Arrow batch boundaries between the two UDF nodes
-    return elements.mapInPandas(
-        _make_batched_fold(opts, by_title), schema=ELEMENT_SCHEMA
+    return partition_documents(
+        docs, per_doc_transform=_chunk_fold(by_title, chunk_kwargs)
     )
 
 
@@ -124,9 +119,9 @@ def stream_to_token_shards(
     available_now: bool = False,
 ) -> StreamingQuery:
     """The streaming DATA-LOADER tail: chunk stream → NB classifier
-    gate → token-balanced shard assignment → parquet shards. The
-    round-8 streaming primitives (map-only NB scorer, distributed
-    prefix-sum sharding) composed end-to-end.
+    gate → token-balanced shard assignment → parquet shards: the
+    map-only NB scorer and distributed prefix-sum sharding composed
+    end-to-end.
 
     Runs as ``foreachBatch``: inside each micro-batch the chunks are
     scored against the broadcast model (``nb_score`` — the batch twin;
