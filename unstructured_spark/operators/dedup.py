@@ -1579,74 +1579,41 @@ def bloom_probe_stream(
     k: int = 4,
     seed: str = "bloom-v1",
 ) -> DataFrame:
-    """Map-only streaming twin of :func:`bloom_probe_new`: the sparse
-    (word, bits) filter — ≤ m_bits/32 rows by construction — is
-    collected once and broadcast; each Arrow batch probes in pure
-    Python integers. Stateless ``mapInPandas``, so it composes with
-    append sinks, watermarks, and availableNow drains (the aggregation
-    in the batch form does not). Bit-identical verdicts to the batch
-    probe by construction — same md5 positions, same bit tests —
-    pinned by ``tests/test_dedup_cap.py``.
+    """Streaming form of :func:`bloom_probe_new`: no aggregate and no
+    shuffle, so it composes with append sinks, watermarks and
+    availableNow drains (the batch form's groupBy does not). Each row
+    draws its k positions with :func:`_bloom_positions` over the shared
+    ``fingerprint`` and tests each against the sparse (word, bits)
+    filter — at most m_bits/32 rows, one per word, as
+    :func:`bloom_fingerprint_index` and :func:`merge_bloom_indexes`
+    emit it — through one broadcast left join per position, with the
+    batch probe's own bit test, so the verdicts
+    match it bit for bit (pinned by tests/test_dedup_cap.py and
+    tests/test_stream_dedup_single_pass.py). The filter rides the plan
+    as a broadcast relation, not a literal, so plan descriptions stay
+    small.
 
-    The streaming incremental-dedup front door: stream → this gate →
-    only ``maybe_seen`` rows (a tiny fraction) proceed to the exact
-    index anti-join; guaranteed-new rows flow through shuffle-free
-    (see ``streaming.dedup.exact_dedup_stream_against_index``). A
-    pass-through gate: emits every input column unchanged plus
-    ``maybe_seen``.
+    A pass-through gate: emits every input column unchanged plus
+    ``maybe_seen``; NULL-text rows carry no fingerprint and probe as
+    ``maybe_seen=false``.
     """
-    import pandas as pd
-    from pyspark.sql.types import BooleanType, StructField, StructType
+    from unstructured_spark.operators.text_analysis import fingerprint
 
-    words = {int(r["word"]): int(r["bits"]) for r in bloom.collect()}
-    bc = new_docs.sparkSession.sparkContext.broadcast(words)
-    m, kk, sd = int(m_bits), int(k), str(seed)
-    # copy the field list: StructType.add MUTATES, and new_docs.schema
-    # is the DataFrame's cached schema object — mutating it makes the
-    # source frame claim a column it doesn't have
-    out_schema = StructType(
-        list(new_docs.schema.fields)
-        + [StructField("maybe_seen", BooleanType())]
+    fp = fingerprint(F.col(text))
+    words = F.broadcast(
+        bloom.select(F.col("word").alias("_w"), F.col("bits").alias("_b"))
     )
-
-    def run(batches):
-        import hashlib
-        import re
-
-        # ASCII \s, matching the column path's Java regex semantics
-        # (same mirror discipline as nb_score_stream); SQL trim() strips
-        # ONLY the space char, so .strip(" ") — not Java String.trim
-        ws = re.compile(r"[ \t\n\x0b\f\r]+")
-        table = bc.value
-
-        def fp(txt):
-            if txt is None:
-                return None
-            norm = ws.sub(" ", str(txt)).strip(" ").lower()
-            return hashlib.md5(norm.encode()).hexdigest()
-
-        def probe(txt):
-            f = fp(txt)
-            if f is None:
-                return False
-            for j in range(kk):
-                pos = (
-                    int(
-                        hashlib.md5(f"{f}:{j}:{sd}".encode()).hexdigest()[:15],
-                        16,
-                    )
-                    % m
-                )
-                if not (table.get(pos // 32, 0) >> (pos % 32)) & 1:
-                    return False
-            return True
-
-        for pdf in batches:
-            res = pdf.copy()
-            res["maybe_seen"] = [probe(t) for t in pdf[text]]
-            yield res
-
-    return new_docs.mapInPandas(run, out_schema)
+    probed = new_docs.withColumn(
+        "_bp", F.when(fp.isNotNull(), _bloom_positions(fp, m_bits, k, seed))
+    ).withColumn("maybe_seen", F.col("_bp").isNotNull())
+    for j in range(int(k)):
+        hit = F.expr(f"(coalesce(_b, 0) >> cast(_bp[{j}] % 32 as int)) & 1")
+        probed = (
+            probed.join(words, F.expr(f"_bp[{j}] div 32") == F.col("_w"), "left")
+            .withColumn("maybe_seen", F.col("maybe_seen") & (hit == F.lit(1)))
+            .drop("_w", "_b")
+        )
+    return probed.drop("_bp")
 
 
 def remove_boilerplate_lines(

@@ -22,7 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from unstructured_spark.operators.dedup import minhash_signatures  # noqa: F401  (batch twin)
 from unstructured_spark.operators.text_analysis import fingerprint
 
 
@@ -71,9 +70,13 @@ def near_dedup_stream_against_index(
     too short to shingle carry no signature and are always novel
     (same contract as the batch operator).
 
-    Shape: band keys map-side per doc → stream-static equi-join on
-    (band, key) — collisions only, never stream × history — → one
-    watermark-bounded (ts, doc) aggregate of the max estimate.
+    Shape: one pass — band keys map-side per doc (NULL for short docs)
+    → stream-static left equi-join on (band, key) — collisions only,
+    never stream × history — → one watermark-bounded (ts, doc)
+    aggregate of the max estimate. When the band index is too large to
+    broadcast, the join shuffles, and every short doc's NULL key hashes
+    to the same reducer partition: a feed of mostly sub-shingle rows
+    would skew there.
 
     Emits (doc_id, ts, max_est_jaccard, is_novel); ``emit='novel'``
     filters to the suppressed stream.
@@ -101,18 +104,18 @@ def near_dedup_stream_against_index(
         "doc_id", ts_col, F.col("_h"),
         rowwise_minhash_sig(F.col("_h"), num_hashes).alias("sig"),
     )
-    # short docs (empty shingle set -> empty _h -> null sig mins) keep
-    # a row with no band explode via the size guard below
-    banded = (
-        staged.filter(F.size("_h") > 0)
-        .select(
-            "doc_id", ts_col, "sig",
-            F.explode(_band_key_structs(num_hashes, bands)).alias("bk"),
-        )
-        .select(
-            "doc_id", ts_col, "sig",
-            F.col("bk.band").alias("band"), F.col("bk.key").alias("key"),
-        )
+    # short docs (empty shingle set -> empty _h) carry NULL band keys:
+    # explode_outer keeps their one row, the join never matches it, and
+    # the estimate coalesces to 0.0 — one branch, so an upstream map
+    # node runs once per micro-batch
+    banded = staged.select(
+        "doc_id", ts_col, "sig",
+        F.explode_outer(
+            F.when(F.size("_h") > 0, _band_key_structs(num_hashes, bands))
+        ).alias("bk"),
+    ).select(
+        "doc_id", ts_col, "sig",
+        F.col("bk.band").alias("band"), F.col("bk.key").alias("key"),
     )
     idx = _guarded_index(index, num_hashes, bands).select(
         F.col("sig").alias("_old_sig"), F.col("band"), F.col("key")
@@ -127,12 +130,8 @@ def near_dedup_stream_against_index(
             F.when(F.col("_old_sig").isNotNull(), est), F.lit(0.0)
         ).alias("_est"),
     )
-    short = staged.filter(F.size("_h") == 0).select(
-        "doc_id", ts_col, F.lit(0.0).alias("_est")
-    )
     scored = (
-        collided.unionByName(short)
-        .withWatermark(ts_col, watermark)
+        collided.withWatermark(ts_col, watermark)
         .groupBy(ts_col, "doc_id")
         .agg(F.max("_est").alias("max_est_jaccard"))
         .select(
@@ -283,40 +282,26 @@ def exact_dedup_stream_against_index(
     k: int = 4,
     seed: str = "bloom-v1",
 ) -> DataFrame:
-    """Exact incremental dedup vs a persisted corpus with a Bloom
-    front door — the streaming data-loader's cheapest history check.
+    """Exact incremental dedup vs a persisted corpus: one stream-static
+    anti-join of each row's normalized-text fingerprint against
+    ``index`` (a :func:`operators.dedup.fingerprint_index` read as a
+    batch DataFrame) — :func:`operators.dedup.exact_dedup_against_index`
+    without its within-batch step, which is stream-safe as it stands.
+    One pass per micro-batch: a streaming plan cannot cache, so a fork
+    would re-read and re-parse every file upstream of it.
 
-    ``bloom`` is a :func:`operators.dedup.bloom_fingerprint_index`
-    (read as a batch DataFrame) over the SAME history as ``index``
-    (a :func:`operators.dedup.fingerprint_index`). The map-only
-    stream probe marks guaranteed-new rows (``maybe_seen=false`` —
-    the vast majority on a typical ingest day), which pass through
-    with no join at all; only suspects anti-join the exact
-    fingerprint index (stream-static, history never shuffled into
-    the stream). Bloom error is one-sided, so the output row set is
-    EXACTLY the plain anti-join of the whole stream — the filter only
-    removes join work, never changes the answer (pinned by the
-    equivalence test in tests/test_dedup_cap.py).
+    ``bloom``, ``m_bits``, ``k`` and ``seed`` are accepted and unused.
+    A Bloom gate only pays when guaranteed-new rows skip the join, and
+    in a stream that takes a second branch; with one join, the gate
+    would add k md5 draws per row and keep no row out of it. The
+    streaming probe itself is :func:`operators.dedup.bloom_probe_stream`
+    (``attribution_stream`` reports its verdict).
 
-    Emits the novel rows with the input schema. Within-stream
-    duplicates are not collapsed — chain :func:`dedup_stream`
-    upstream, same contract as the near-dup form above.
+    Emits the novel rows with the input schema; NULL-text rows pass.
+    Within-stream duplicates are not collapsed — chain
+    :func:`dedup_stream` upstream, same contract as the near-dup form
+    above.
     """
-    from unstructured_spark.operators.dedup import bloom_probe_stream
+    from unstructured_spark.operators.dedup import exact_dedup_against_index
 
-    gated = bloom_probe_stream(
-        docs, bloom, text=text, m_bits=m_bits, k=k, seed=seed
-    )
-    definite = gated.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    suspects = (
-        gated.filter(F.col("maybe_seen"))
-        .drop("maybe_seen")
-        .withColumn("_fp", fingerprint(F.col(text)))
-        .join(
-            index.select(F.col("fingerprint").alias("_fp")).distinct(),
-            "_fp",
-            "left_anti",
-        )
-        .drop("_fp")
-    )
-    return definite.unionByName(suspects)
+    return exact_dedup_against_index(docs, index, text=text, intra_batch=False)

@@ -355,17 +355,18 @@ def attribution_stream(
     per-document gate-verdict table over a live ingest stream. The
     gopher/C4/PII gates are pure expressions, so they run unchanged on
     a streaming DataFrame; the batch form's exact-dup window (stateful,
-    not append-safe) is replaced by the map-only Bloom probe against a
-    persisted history index (``dedup.bloom_fingerprint_index``) — the
-    same swap ``exact_dedup_stream_against_index`` makes. The dup
+    not append-safe) is replaced by the streaming Bloom probe
+    (``dedup.bloom_probe_stream``) against a persisted history index
+    (``dedup.bloom_fingerprint_index``). The dup
     column is honestly named ``maybe_dup``: a Bloom hit can be a false
     positive, so a 'maybe_dup' verdict routes to an exact confirm
     downstream, while ``maybe_dup=false`` is DEFINITIVE (never seen).
     Without a ``bloom`` index the dup gate is skipped
     (``maybe_dup=false`` everywhere).
 
-    Fully stateless map-only plan: composes with append sinks,
-    watermarks, and availableNow drains; per-batch cost is one scan.
+    Stateless plan — the probe's filter joins are broadcast, never
+    shuffled: composes with append sinks, watermarks, and availableNow
+    drains; per-batch cost is one scan of the stream.
     """
     from unstructured_spark.operators.pii import pii_total_expr
     from unstructured_spark.operators.quality_filters import (
