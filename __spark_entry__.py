@@ -2993,7 +2993,7 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_hash_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature-hash embedding of document text via the mapInPandas
-    embedding operator (per-worker encoder singleton; SURVEY §2.7).
+    embedding operator (encoder built once per task; SURVEY §2.7).
     The md5-based HashingEncoder is engine-portable, so DuckDB
     reproduces the exact vectors — this oracle-checks the embedding
     plumbing end to end."""

@@ -4,10 +4,12 @@ provider modules under ``unstructured/embed/``; SURVEY §2.7).
 The reference's ``BaseEmbeddingEncoder`` exposes
 ``embed_documents(elements)`` / ``embed_query(str)`` and mutates
 ``Text.embeddings``. Here embedding is a column transformation:
-``mapInPandas`` with the iterator API so the encoder is constructed
-ONCE per executor process (model-locality; SURVEY §4 "model
-singletons"), batching text through the encoder and emitting an
-``array<float>`` column.
+``mapInPandas`` with the iterator API, so the encoder is constructed
+once per task (one call of the batch function; SURVEY §4 "model
+singletons") and reused across its Arrow batches, batching text
+through the encoder and emitting an ``array<float>`` column. Over an
+un-cached ``partition_documents`` output that task is the parse task
+itself (``operators.pymap``).
 
 Providers:
 - :class:`HashingEncoder` — deterministic, dependency-free feature
@@ -33,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from unstructured_spark.operators.pymap import fuses, map_in_pandas
 
 
 class EmbeddingEncoder(Protocol):
@@ -309,9 +313,14 @@ def embed_elements(
 ) -> DataFrame:
     """Add an ``array<float>`` embedding column.
 
-    ``mapInPandas`` iterator form: the encoder is built once per python
-    worker and reused across Arrow batches — the executor-singleton
-    pattern the reference approximates with its lazy provider clients.
+    ``mapInPandas`` iterator form: the encoder is built once per task
+    and reused across its Arrow batches — the singleton pattern the
+    reference approximates with its lazy provider clients. When ``df``
+    is the un-cached output of ``partition_documents`` /
+    ``partition_and_chunk`` (or of another ``embed_elements`` over one),
+    the embedding runs in the same Python task as the parse, with no
+    Arrow round-trip between them; a cached ``df`` is read from its
+    cache.
     """
     fields = [f for f in df.schema.fields if f.name != out_col]
     out_schema = T.StructType(
@@ -320,7 +329,7 @@ def embed_elements(
     in_cols = [f.name for f in fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        encoder = encoder_factory()  # once per worker process
+        encoder = encoder_factory()  # once per task
         for pdf in batches:
             texts = pdf[text_col].fillna("").astype(str).tolist()
             vectors: list[list[float]] = []
@@ -330,7 +339,9 @@ def embed_elements(
             out[out_col] = vectors
             yield out
 
-    return df.select(*in_cols).mapInPandas(run, schema=out_schema)
+    # on a fusing frame the projection runs in pandas (``pdf[in_cols]``)
+    src = df if fuses(df) else df.select(*in_cols)
+    return map_in_pandas(src, run, out_schema)
 
 
 def embed_query_column(

@@ -12,6 +12,11 @@ Scale design (SURVEY §4):
   is rebalanced first (``skew.spread``; cheap: rows are (path, bytes)).
 - detection reads only the head bytes; parsers are lazily imported per
   executor process (the reference's partitioner cache trick).
+- the parse ``mapInPandas`` goes through ``operators.pymap``, so a
+  ``mapInPandas`` operator applied directly to its output
+  (``embed_elements``) is composed into the parse function: one Python
+  task and no Arrow round-trip between them. The exception is a cached
+  parse output, which is read from its cache, not re-parsed.
 - at 100 TB, content should be paths into object storage with
   executor-side opens — pass ``content_col=None`` and a ``path_col``;
   inlined bytes are capped by spark.sql.sources.binaryFile.maxLength.
@@ -25,6 +30,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from unstructured_spark.operators.pymap import map_in_pandas
 from unstructured_spark.operators.skew import spread
 from unstructured_spark.schema import (
     ELEMENT_COLUMNS,
@@ -146,7 +152,7 @@ def partition_documents(
                     rows.extend(doc_rows)
             yield pd.DataFrame(rows, columns=ELEMENT_COLUMNS)
 
-    return narrowed.mapInPandas(parse_batches, schema=ELEMENT_SCHEMA)
+    return map_in_pandas(narrowed, parse_batches, ELEMENT_SCHEMA)
 
 
 def _chunk_fold(by_title: bool, chunk_kwargs: dict | None = None):

@@ -6,13 +6,14 @@ RAG ingestion run actually executes, built from the engine's operators.
     documents ─ partition ─ chunk ─ quality gate ─ near-dup drop ─ embed
 
 Shuffle bill of the whole flow (see SCALING.md):
-  - partition: zero (mapInPandas, per-doc finalize in-UDF)
-  - chunk: one exchange clustering elements by doc
+  - partition + chunk: zero (one mapInPandas: per-doc finalize and the
+    built-in chunk fold run inside the parse UDF)
   - quality gate: zero (array expressions + filter)
   - near-dup drop: the dedup sub-pipeline's bucket-keyed shuffles over
     the (small) chunk-text table; the corpus filter itself is a
     broadcast anti-join
-  - embed: zero (mapInPandas with per-worker encoder singleton)
+  - embed: zero (mapInPandas with a per-task encoder; with neither
+    gate on it runs inside the parse task, see ``operators.pymap``)
 """
 
 from __future__ import annotations
@@ -47,17 +48,17 @@ def training_data_pipeline(
     override via ``quality_kwargs``). Near-dedup treats each chunk as a
     document keyed by ``element_id``.
     """
-    from unstructured_spark.operators.chunking import chunk as chunk_op
     from unstructured_spark.operators.dedup import drop_near_duplicates
-    from unstructured_spark.operators.partition_auto import partition_documents
+    from unstructured_spark.operators.partition_auto import partition_and_chunk
     from unstructured_spark.operators.quality_filters import (
         gopher_keep_expr,
         gopher_stats_exprs,
         line_repetition_exprs,
     )
 
-    elements = partition_documents(documents)
-    chunks = chunk_op(elements, strategy=chunking_strategy, **(chunk_kwargs or {}))
+    chunks = partition_and_chunk(
+        documents, chunking_strategy=chunking_strategy, chunk_kwargs=chunk_kwargs
+    )
 
     if quality_filter:
         qkw = {"min_words": 10, "min_stopwords": 0, "min_mean_word_len": 2.0}
